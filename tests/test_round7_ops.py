@@ -316,6 +316,18 @@ def _py_bfs(edges, seeds, max_hops):
         ([(1, 2), (2, 1), (2, 3), (3, 1), (3, 3)], [3], 2),
         # seed with no edges stays at hops 0
         ([(5, 6)], [7], 3),
+        # odd cycle: the two frontiers meet across one edge at the far
+        # side (hops 3 and 3 on C7), which the one-hop look-back must not
+        # relabel as hop 4
+        ([(i, (i + 1) % 7) for i in range(7)], [0], 5),
+        # triangle-dense strip: every node has neighbours in its own
+        # frontier and in the previous one
+        ([(i, i + 1) for i in range(9)] + [(i, i + 2) for i in range(8)],
+         [0], 6),
+        # asymmetric directed input, edges pointing at the seeds: reach
+        # is over the undirected edge set, so every node is found
+        ([(1, 0), (2, 1), (3, 2), (4, 0), (5, 4), (5, 3), (6, 9), (7, 9)],
+         [0, 9], 4),
     ],
 )
 def test_bfs_hops_matches_python_twin(spark, edges, seeds, max_hops):
@@ -331,8 +343,9 @@ def test_bfs_hops_matches_python_twin(spark, edges, seeds, max_hops):
 
 
 def test_bfs_hops_first_label_is_minimum(spark):
-    """A node reachable at hop 1 and hop 2 must settle at 1 (the anti-join
-    must run against the full settled set, not just the prior frontier)."""
+    """A node reachable at hop 1 and hop 2 must settle at 1, and the seed
+    must not come back at hop 2 (the anti-join must cover the previous
+    frontier, not just the current one)."""
     from neotree_data_pipeline_kedro_spark.operators.components import bfs_hops
 
     edges = [(0, 1), (0, 2), (2, 1)]  # 1 is 1 hop away directly, 2 via 2

@@ -805,6 +805,21 @@ def test_dag_layers_longest_path_and_cycle_guard(spark):
     with pytest.raises(ValueError, match="not a DAG"):
         dag_layers(cyc, max_iters=8)
 
+    # a valid DAG plus a disjoint cycle: the cycle's 3 nodes never get a
+    # layer, which the |nodes| - |layers| count must report
+    dag_plus_cycle = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)], "src bigint, dst bigint"
+    )
+    with pytest.raises(ValueError, match=r"3 node\(s\) unreachable from any source"):
+        dag_layers(dag_plus_cycle, max_iters=8)
+
+    # a cycle reachable from a source feeds the frontier forever
+    reachable_cycle = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 2)], "src bigint, dst bigint"
+    )
+    with pytest.raises(ValueError, match="still non-empty after 8 rounds"):
+        dag_layers(reachable_cycle, max_iters=8)
+
 
 # -------------------------------------------- write-audit-publish
 def test_write_audit_publish_lifecycle(spark, tmp_path):

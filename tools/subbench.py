@@ -1,7 +1,14 @@
 """Paired subset bench: time a few registry queries with the noop sink.
 
 Usage: python tools/subbench.py q1 q2 ... [--runs N] [--sf DIR]
-Prints one JSON line {name: [run_secs...]} plus min/median per query.
+Each run is one pass over the queries in the order given, so a query's
+later runs see the codegen cache and JIT state a repeated pass over the
+whole set leaves behind. Prints one JSON line {name: {"s": [run_secs...],
+"jobs": [...], "compiles": [...]}} and a min line per query on stderr.
+For each run, "jobs" counts the Spark jobs in the run's job group (build-time
+actions plus the sink) and "compiles" the generated classes Spark's
+codegen compiled during the run (CodegenMetrics; 0 once every class the
+run needs is in the codegen cache).
 Run on a quiet machine; compare MIN-of-runs across code variants
 (guide §1.4 — first run pays janino/JIT, min is the steady state).
 """
@@ -27,28 +34,40 @@ def main() -> None:
     from neotree_data_pipeline_kedro_spark.session import get_spark
 
     spark = get_spark(app_name="subbench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     # warmup: absorb JVM/codegen/Arrow + python worker pool startup
     next(iter(QUERIES.values()))(spark, args.sf).write.format("noop").mode(
         "overwrite"
     ).save()
     spark.range(
-        0, 32_000, numPartitions=spark.sparkContext.defaultParallelism
+        0, 32_000, numPartitions=sc.defaultParallelism
     ).mapInPandas(lambda it: it, schema="id long").write.format("noop").mode(
         "overwrite"
     ).save()
 
-    out: dict[str, list[float]] = {}
-    for name in args.queries:
-        fn = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"subbench:{name}")
-        runs = []
-        for _ in range(args.runs):
+    out = {name: {"s": [], "jobs": [], "compiles": []} for name in args.queries}
+    for i in range(args.runs):
+        for name, runs in out.items():
+            sc.setJobGroup(f"subbench:{name}:{i}", name)
+            c0 = compiles.getCount()
             t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        out[name] = runs
-        print(f"{name}: min {min(runs):.2f} runs {runs}", file=sys.stderr)
+            QUERIES[name](spark, args.sf).write.format("noop").mode("overwrite").save()
+            runs["s"].append(round(time.perf_counter() - t0, 3))
+            runs["compiles"].append(compiles.getCount() - c0)
+            # job ids reach the status tracker through the asynchronous
+            # listener bus: drain it before counting the run's job group
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            runs["jobs"].append(
+                len(sc.statusTracker().getJobIdsForGroup(f"subbench:{name}:{i}"))
+            )
+    for name, runs in out.items():
+        print(
+            f"{name}: min {min(runs['s']):.2f} runs {runs['s']} "
+            f"jobs {runs['jobs']} compiles {runs['compiles']}",
+            file=sys.stderr,
+        )
     print(json.dumps(out))
 
 
